@@ -7984,7 +7984,6 @@ def pretrain_prep(
     block_cols: list[str] | str | None = "auto",
     max_collisions_per_doc: float | None = _DEFAULT,  # type: ignore[assignment]
     auto_partition: bool = True,
-    fuse_report_stages: bool = True,
 ) -> DataFrame:
     """The full pretraining-data preparation funnel as ONE lazy DAG — the
     flagship composition of the engine's LLM operators, end to end:
@@ -8006,9 +8005,10 @@ def pretrain_prep(
 
     Plan-size control (round-3 change; round-4 fuses the first three
     stages into one materialization job whose ``observe`` aggregates
-    produce the raw/gated report rows for free): each remaining funnel
-    stage is ``localCheckpoint(eager=True)``-materialized at its
-    boundary, so a downstream stage references a truncated lineage
+    produce the raw/gated report rows for free): the exact-dedup and
+    decontaminated boundaries are ``localCheckpoint(eager=True)``-
+    materialized (near-dedup is observed inside the decontaminated
+    job), so a downstream stage references a truncated lineage
     instead of the full upstream DAG. Without this the single lazy DAG re-referenced the
     whole upstream lineage per stage (PLANS.md recorded 2 257 printed
     exchanges; 57.7 s at sf0.01, all analysis/codegen) — and plan size
@@ -8144,14 +8144,6 @@ def pretrain_prep(
     # volume at corpus scale.
     near_drop = pairs.select(F.col("id_b").alias("doc_id"))
     obs_near, m_near = _stage_obs()
-    if not fuse_report_stages:
-        # r14 two-checkpoint form, kept behind the flag for A/B and for
-        # callers that want a materialized near-dedup stage table
-        neardeduped = (
-            exact.join(near_drop, "doc_id", "left_anti")
-            .observe(obs_near, *m_near)
-            .localCheckpoint(eager=True)
-        )
     # Grams meet as 8-byte xxhash64 longs, not strings (the
     # substring_dup_stats trick): the broadcast set and every comparison
     # shrink from ~avg-gram-length bytes to 8, at a ~1e-9 collision rate
@@ -8189,56 +8181,41 @@ def pretrain_prep(
         .distinct()
     )
     obs_clean, m_clean = _stage_obs()
-    if fuse_report_stages:
-        # r15 (verdict item 3, guide §1.2): the near_dedup → decontaminated
-        # boundary no longer pays its own checkpoint ACTION (~4 AQE jobs +
-        # a full stage-table write). Both observes ride ONE materialization
-        # job: the near-dedup anti-join streams through obs_near, the
-        # decontamination anti-join through obs_clean, and the single
-        # localCheckpoint at the end populates both. Metric exactness by
-        # construction — each observe node appears exactly ONCE in the
-        # plan (the double-count risk that deferred this in r14 came from
-        # referencing the observed subtree twice; here the gram branch
-        # derives from the CHECKPOINTED `exact` table instead, so nothing
-        # upstream of an observe is re-referenced), and every near-dedup
-        # survivor row flows through obs_near before the downstream filter
-        # (filters do not push through CollectMetrics — pinned, together
-        # with value parity vs the unfused form, in tests/test_funnel.py).
-        # The gram branch reading `exact` rather than the near-dedup
-        # survivors adds grams of near-DROPPED docs to the semi-join:
-        # `contaminated` may then contain near-dropped ids, but the anti-
-        # join's stream side already lacks them, so `clean` is row-for-row
-        # identical — and the branch now reads a materialized checkpoint
-        # instead of re-running the anti-join a second time at scale.
-        doc_grams = _gram_rows(exact.filter(F.col("doc_id") % 10 != 0), with_id=True)
-        contaminated = (
-            doc_grams.join(F.broadcast(bench_grams), "gram_h", "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        clean = (
-            exact.join(near_drop, "doc_id", "left_anti")
-            .observe(obs_near, *m_near)
-            .filter(F.col("doc_id") % 10 != 0)
-            .join(contaminated, "doc_id", "left_anti")
-            .observe(obs_clean, *m_clean)
-            .localCheckpoint(eager=True)
-        )
-    else:
-        doc_grams = _gram_rows(
-            neardeduped.filter(F.col("doc_id") % 10 != 0), with_id=True
-        )
-        contaminated = (
-            doc_grams.join(F.broadcast(bench_grams), "gram_h", "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        clean = (
-            neardeduped.filter(F.col("doc_id") % 10 != 0)
-            .join(contaminated, "doc_id", "left_anti")
-            .observe(obs_clean, *m_clean)
-            .localCheckpoint(eager=True)
-        )
+    # The near_dedup -> decontaminated boundary pays no checkpoint ACTION
+    # of its own (~4 AQE jobs + a full stage-table write): both observes
+    # ride ONE materialization job. The near-dedup anti-join streams
+    # through obs_near, the decontamination anti-join through obs_clean,
+    # and the single localCheckpoint at the end populates both. Metric
+    # exactness holds by construction: each observe node appears exactly
+    # ONCE in the plan (an observed subtree referenced twice would double
+    # its accumulators; the gram branch therefore derives from the
+    # CHECKPOINTED `exact` table, so nothing upstream of an observe is
+    # re-referenced), and every near-dedup survivor row flows through
+    # obs_near before the downstream filter (filters do not push through
+    # CollectMetrics). Both are pinned in tests/test_funnel.py against
+    # funnel.run_staged_funnel, which materializes and counts each stage
+    # as its own table.
+    # The gram branch reading `exact` rather than the near-dedup
+    # survivors adds grams of near-DROPPED docs to the semi-join:
+    # `contaminated` may then contain near-dropped ids, but the anti-
+    # join's stream side already lacks them, so `clean` is row-for-row
+    # what decontaminating the near-dedup survivors gives — and the
+    # branch reads a materialized checkpoint instead of re-running the
+    # near-dedup anti-join at scale.
+    doc_grams = _gram_rows(exact.filter(F.col("doc_id") % 10 != 0), with_id=True)
+    contaminated = (
+        doc_grams.join(F.broadcast(bench_grams), "gram_h", "left_semi")
+        .select("doc_id")
+        .distinct()
+    )
+    clean = (
+        exact.join(near_drop, "doc_id", "left_anti")
+        .observe(obs_near, *m_near)
+        .filter(F.col("doc_id") % 10 != 0)
+        .join(contaminated, "doc_id", "left_anti")
+        .observe(obs_clean, *m_clean)
+        .localCheckpoint(eager=True)
+    )
 
     packed = packing.pack_sequences(clean, "n_tokens", "lang", "doc_id", max_tokens=512)
     packed_summary = packed.agg(

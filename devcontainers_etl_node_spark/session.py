@@ -9,13 +9,29 @@ Scale notes (100 TB / 1000-executor design stance):
   ~2-3x total cores or rely on AQE coalescing (enabled here).
 - AQE skew-join handling is enabled so hot keys split automatically.
 - maxPartitionBytes left at default 128m — right for large parquet scans.
+- the driver heap is sized to the host (:func:`driver_memory`): a heap
+  larger than physical RAM lets the JVM grow until the kernel OOM killer
+  takes it down mid-run.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from devcontainers_etl_node_spark.config import DEFAULT, EngineConfig
+
+
+_MAX_DRIVER_MB = 48 * 1024
+_HEAP_SHARE_OF_RAM = 0.6  # headroom for off-heap, metaspace and Python workers
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for this host: 60% of physical RAM, capped
+    at 48g (large hosts keep the 48g heap the scale rungs ran under)."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(_MAX_DRIVER_MB, int(ram * _HEAP_SHARE_OF_RAM) >> 20)}m"
 
 
 def get_spark(config: EngineConfig | None = None) -> SparkSession:
@@ -29,7 +45,7 @@ def get_spark(config: EngineConfig | None = None) -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # JVM unified logging goes to STDOUT by default, so a GC warning
         # (e.g. "[...][warning][gc,alloc] ... GCLocker ...") can interleave

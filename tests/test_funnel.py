@@ -5,6 +5,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from devcontainers_etl_node_spark import funnel
 from devcontainers_etl_node_spark.queries.catalog import QUERIES, table
 from tests.conftest import SF_SMALL
@@ -26,30 +28,41 @@ def _parquet_mtimes(path: str) -> dict[str, float]:
     }
 
 
-def test_staged_funnel_matches_pretrain_prep(spark, tmp_path):
+@pytest.fixture(scope="module")
+def funnel_reports(spark, tmp_path_factory):
+    """One cold run_staged_funnel and one pretrain_prep at SF_SMALL,
+    shared by the two parity tests below."""
     docs = table(spark, SF_SMALL, "documents")
-    out = funnel.run_staged_funnel(spark, docs, str(tmp_path))
-    assert out["computed"] == list(funnel.STAGES)  # cold run computes all
-    staged = _report_rows(out["report"])
-    single_dag = _report_rows(QUERIES["pretrain_prep"](spark, SF_SMALL))
-    assert staged == single_dag
-
-
-def test_pretrain_prep_fused_boundary_metrics_exact(spark):
-    """r15 (verdict item 3 done-criterion): fusing the near_dedup →
-    decontaminated boundary into one action must leave every observe
-    metric EXACT — the double-counting risk that deferred the fusion in
-    r14 (an observe subtree referenced twice doubles its accumulators),
-    plus the filter-pushdown risk (the %10 benchmark filter sliding below
-    obs_near would exclude benchmark docs from the near_dedup row). Pin
-    the fused report row-for-row against the unfused r14 form on a corpus
-    where the stages actually differ (near-dup drops AND nonzero
-    contamination at SF_SMALL)."""
-    fused = _report_rows(QUERIES["pretrain_prep"](spark, SF_SMALL))
-    unfused = _report_rows(
-        QUERIES["pretrain_prep"](spark, SF_SMALL, fuse_report_stages=False)
+    out = funnel.run_staged_funnel(
+        spark, docs, str(tmp_path_factory.mktemp("staged"))
     )
-    assert fused == unfused
+    return {
+        "computed": out["computed"],
+        "staged": _report_rows(out["report"]),
+        "single_dag": _report_rows(QUERIES["pretrain_prep"](spark, SF_SMALL)),
+    }
+
+
+def test_staged_funnel_matches_pretrain_prep(funnel_reports):
+    # cold run computes all
+    assert funnel_reports["computed"] == list(funnel.STAGES)
+    assert funnel_reports["staged"] == funnel_reports["single_dag"]
+
+
+def test_pretrain_prep_fused_boundary_metrics_exact(funnel_reports):
+    """pretrain_prep fuses the near_dedup -> decontaminated boundary into
+    one action, so both stage rows come from ``observe`` metrics of a
+    single materialization job. Every metric must still be EXACT: an
+    observe subtree referenced twice doubles its accumulators, and the
+    %10 benchmark filter sliding below obs_near would exclude benchmark
+    docs from the near_dedup row. Pin the fused report row-for-row
+    against run_staged_funnel, which materializes each stage as its own
+    txlog table, counts it there, and decontaminates the near-dedup
+    survivors (not the exact-dedup table the fused gram branch reads),
+    on a corpus where the stages actually differ (near-dup drops AND
+    nonzero contamination at SF_SMALL)."""
+    fused = funnel_reports["single_dag"]
+    assert fused == funnel_reports["staged"]
     by_stage = {s: (d, t) for _, s, d, t in fused}
     # the stages the fused boundary touches must be non-degenerate here,
     # or this test pins nothing

@@ -5,8 +5,8 @@ execution memory (~35 MB/task) is far below the sort volume, and must
 COMPLETE with nonzero spill metrics instead of dying.
 
 The probe is a subprocess (tools/spill_probe.py) because driver heap and
-spark.memory.fraction are JVM-start settings — the test session's 48 g
-JVM cannot be shrunk in place. Measured numbers are recorded in PERF.md.
+spark.memory.fraction are JVM-start settings — the test session's JVM
+cannot be shrunk in place. Measured numbers are recorded in PERF.md.
 """
 
 from __future__ import annotations
