@@ -28,7 +28,13 @@ class EngineConfig:
     """All engine knobs. Defaults mirror the reference where one exists."""
 
     # --- Spark runtime ---
-    master: str = field(default_factory=lambda: os.getenv("SPARK_MASTER", f"local[{os.getenv('SPARK_GRAFT_CPUS', '32')}]"))
+    # one local task slot per CPU this process may run on
+    master: str = field(
+        default_factory=lambda: os.getenv(
+            "SPARK_MASTER",
+            f"local[{os.getenv('SPARK_GRAFT_CPUS') or len(os.sched_getaffinity(0))}]",
+        )
+    )
     app_name: str = "devcontainers-etl-node-spark"
     shuffle_partitions: int = field(default_factory=lambda: _env_int("SPARK_SHUFFLE_PARTITIONS", 32))
     session_timezone: str = "UTC"  # reference normalizes everything to UTC (loaders.py:128-133)

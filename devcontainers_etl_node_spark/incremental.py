@@ -305,9 +305,9 @@ def run_incremental_dedup(
     # splits (a persist deferred the read the same way, but lazily);
     # (b) a persisted InMemoryRelation canonicalizes per consumer, so the
     # verify action's repeated subtrees lose ReusedExchange and the band
-    # join replicates (measured 2.6-2.9x, tools/exp_minhash_gated_r14.py)
-    # — checkpoint blocks canonicalize identically everywhere and release
-    # via GC when the step's frames drop.
+    # join replicates (measured 2.6-2.9x, OPTIMIZATION_r14.md "minhash
+    # gated/blocked batch path") — checkpoint blocks canonicalize
+    # identically everywhere and are freed by GC when the step's frames drop.
     pin_store = store_buckets and cur is not None
     if auto_partition:
         if n_hist is None:  # pre-r14 manifest: one count over ~128 B/doc
@@ -342,7 +342,7 @@ def run_incremental_dedup(
     with geometry:
         if pin_store:
             existing_sigs = existing_sigs.localCheckpoint(eager=True)
-        pairs, merged_sigs, release = dd.minhash_incremental_pairs(
+        pairs, merged_sigs = dd.minhash_incremental_pairs(
             existing_docs,
             existing_sigs,
             new_docs,
@@ -361,8 +361,8 @@ def run_incremental_dedup(
         version = (cur or 0) + 1
         # write the new snapshot fully, THEN commit the pointer — a crash
         # between the two leaves the previous snapshot current and intact.
-        # The write replays the batch signatures from cache (signed once);
-        # release() drops that cache only after the snapshot is on disk.
+        # The write reads the batch signatures the step checkpointed
+        # (signed once, ever).
         if store_buckets:
             # bucketed layout: merged_sigs is the batch DELTA (the operator's
             # store_buckets contract) — an O(batch) append, never a rewrite.
@@ -404,7 +404,6 @@ def run_incremental_dedup(
             shingle_delta.write.mode("overwrite").parquet(
                 os.path.join(workdir, f"shingles_b{version}")
             )
-        release()
         pairs.write.mode("overwrite").parquet(os.path.join(workdir, "pairs", f"run_{version}"))
     if n_total is not None:
         # committed doc count: the NEXT run's history size, read back for

@@ -15,7 +15,6 @@ no Python). No collect(), no driver-side loops.
 from __future__ import annotations
 
 import contextlib
-from typing import Callable
 
 from pyspark.sql import DataFrame, Column, Window, functions as F
 
@@ -38,17 +37,15 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 # ---------------------------------------------------------------------------
-# Shingling + MinHash
+# The MinHash core
+#
+# Every MinHash decision is made once, in the helpers below: text
+# normalization and the shingle hash, the seeded hash family, the band key,
+# the block key, the est-prune cutoff and join, the band join and the exact
+# Jaccard verify. The batch, cross-block, incremental and streaming paths
+# all call them, so their signatures, buckets and pair sets agree by
+# construction (tests/test_minhash_core.py pins that no copy comes back).
 # ---------------------------------------------------------------------------
-
-
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Distinct k-character shingles of the (whitespace-normalized) text."""
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
-    n = F.length(norm)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
 
 
 def word_shingles(col: Column | str, k: int = 3) -> Column:
@@ -62,18 +59,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide MinHash signature: per seed, min over shingle hashes.
-
-    xxhash64(seed, shingle) is the seeded hash family — JVM-side, no UDF.
-    """
-    mins = [
-        F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.lit(i), s)))
-        for i in range(num_hashes)
-    ]
-    return F.array(*mins)
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two string-array columns."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
@@ -81,50 +66,87 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+def _normalized(text: Column) -> Column:
+    """Lower-cased text with whitespace runs collapsed: the shingling input."""
+    return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
+
+
+def _shingle_positions(norm: Column, k: int) -> Column:
+    """1-based start of every k-char shingle; one for texts shorter than k."""
+    return F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
+
+
+def _shingle_hash(norm: Column, pos: Column, k: int) -> Column:
+    """xxhash64 of the k-char shingle at ``pos``: each shingle is string-
+    hashed once, and the seeded family works on this long."""
+    return F.xxhash64(norm.substr(pos, F.lit(k)))
+
+
+def _shingle_hash_array(norm: Column, k: int) -> Column:
+    """Per-row array form of :func:`shingle_hash_rows` (the streaming map
+    side, where a doc row must carry its own shingles)."""
+    return F.transform(_shingle_positions(norm, k), lambda p: _shingle_hash(norm, p, k))
+
+
+def _seeded_hash(h: Column, seed: int) -> Column:
+    """Member ``seed`` of the MinHash hash family over a shingle hash:
+    ``xxhash64((seed+1)<<48 XOR h)``, the seed spread into the input bits.
+    The seed-chained ``xxhash64(seed, h)`` form is degenerate (4x the band
+    collisions, PERF.md). The literal is a 32-bit int, so the shift is
+    taken mod 32: an effective 16-bit spread, still a sound distinct-seed
+    family. FROZEN: incremental snapshots and streaming state persist
+    signatures built with it, so do NOT "fix" the shift to a long literal
+    without a snapshot migration."""
+    return F.xxhash64(F.shiftleft(F.lit(seed + 1), 48).bitwiseXOR(h))
+
+
+def _band_key(sig: Column, band: int, rows: int) -> Column:
+    """Bucket key of one LSH band: xxhash64(band, its ``rows`` minhashes)."""
+    return F.xxhash64(F.lit(band), *[sig[band * rows + i] for i in range(rows)])
+
+
+def _block_key(block_cols: list[str]) -> Column:
+    """One 8-byte ``_blk`` key over the blocking columns; NULL values
+    coalesce into one shared block."""
+    return F.xxhash64(
+        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00null")) for c in block_cols]
+    ).alias("_blk")
+
+
+def _est_cut(threshold: float, num_hashes: int, bands: int) -> float | None:
+    """Cutoff of the signature-estimated Jaccard (the fraction of equal
+    minhashes, σ ≈ sqrt(j(1-j)/num_hashes)), ~2.5σ below ``threshold`` so
+    true pairs survive — or None when the prune cannot cut anything: a
+    band collision already certifies est >= 1/bands."""
+    cut = max(0.0, threshold - 2.5 * (threshold * (1 - threshold) / num_hashes) ** 0.5)
+    return cut if cut > 1.0 / bands else None
+
+
 def shingle_hash_rows(base: DataFrame, shingle_k: int = 5) -> DataFrame:
-    """Exploded (`_id`, `_h`) rows: one xxhash64 per character shingle of
-    the whitespace-normalized text. `base` must carry (_id, _text).
-    Whole-stage codegen end to end (position explode + substr + hash) —
-    the shared front half of batch and incremental MinHash."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col("_text")), r"\s+", " "))
+    """Exploded (`_id`, `_h`) rows: one hash per character shingle of the
+    normalized text. `base` must carry (_id, _text). Whole-stage codegen
+    end to end (position explode + substr + hash). MinHash over the
+    shingle multiset equals MinHash over the set (min is idempotent), so
+    no distinct is needed."""
+    norm = F.col("_norm")
     return (
-        base.withColumn("_norm", norm)
-        .select(
-            "_id",
-            "_norm",
-            F.explode(
-                F.sequence(F.lit(1), F.greatest(F.length("_norm") - (shingle_k - 1), F.lit(1)))
-            ).alias("_pos"),
-        )
-        .select(
-            "_id",
-            F.xxhash64(F.col("_norm").substr(F.col("_pos"), F.lit(shingle_k))).alias("_h"),
-        )
+        base.withColumn("_norm", _normalized(F.col("_text")))
+        .select("_id", "_norm", F.explode(_shingle_positions(norm, shingle_k)).alias("_pos"))
+        .select("_id", _shingle_hash(norm, F.col("_pos"), shingle_k).alias("_h"))
     )
 
 
 def minhash_signature_table(shingle_rows: DataFrame, num_hashes: int = 32) -> DataFrame:
     """(`_id`, `_sig`: array<long>[num_hashes]) from exploded shingle-hash
-    rows: one groupBy computing every seeded min as a codegen'd aggregate,
-    seeds spread into the input bits (xxhash64((seed<<16) XOR h): the
-    literal is a 32-bit int so shiftleft(.., 48) is taken mod 32 — an
-    effective 16-bit spread; that is still a sound distinct-seed family
-    (seeds 1..64 occupy disjoint bit-16.. patterns) and is FROZEN because
-    incremental runs persist signatures built with it — do NOT "fix" the
-    shift to a long literal without a snapshot migration. The seed-chained
-    form is degenerate, see PERF.md), then packed into ONE
-    array column so downstream joins stay 2 columns wide. This is the
+    rows: one groupBy computing every seeded min as a codegen'd aggregate
+    (per-row array lambdas are interpreted and ~50x slower), packed into
+    ONE array column so downstream joins stay 2 columns wide. This is the
     table an incremental dedup run PERSISTS between runs (~num_hashes
     longs per doc): re-signing the historical corpus is the cost
     ``minhash_incremental_pairs`` exists to avoid."""
     return (
         shingle_rows.groupBy("_id")
-        .agg(
-            *[
-                F.min(F.xxhash64(F.shiftleft(F.lit(i + 1), 48).bitwiseXOR(F.col("_h")))).alias(f"h{i}")
-                for i in range(num_hashes)
-            ]
-        )
+        .agg(*[F.min(_seeded_hash(F.col("_h"), i)).alias(f"h{i}") for i in range(num_hashes)])
         .select("_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("_sig"))
     )
 
@@ -133,8 +155,8 @@ def banded_signatures(
     sig: DataFrame, num_hashes: int, bands: int, key_cols: tuple = ()
 ) -> DataFrame:
     """(_id, band, bh[, *key_cols]) rows: each signature cut into `bands`
-    bands whose bucket key is xxhash64(band, rows...) — the join side of
-    LSH.  ``key_cols`` are carried through for blocked banding."""
+    bands with their bucket keys — the join side of LSH.  ``key_cols``
+    are carried through for blocked banding."""
     rows = num_hashes // bands
     return sig.select(
         "_id",
@@ -142,10 +164,7 @@ def banded_signatures(
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(F.lit(b), *[F.col("_sig")[b * rows + i] for i in range(rows)]).alias("bh"),
-                    )
+                    F.struct(F.lit(b).alias("band"), _band_key(F.col("_sig"), b, rows).alias("bh"))
                     for b in range(bands)
                 ]
             )
@@ -155,14 +174,33 @@ def banded_signatures(
     )
 
 
+def _band_join(a: DataFrame, b: DataFrame, key_cols: tuple, self_join: bool) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of banded rows sharing a ``(band, bh[,
+    *key_cols])`` bucket — buckets never span blocks.
+
+    ``self_join``: ``a`` and ``b`` are the same table and each pair is
+    kept once, as a < b. Otherwise ``b`` is the new side of an incremental
+    step: a pair can meet in either orientation, so the ids are ordered
+    with least/greatest and the repeat collapses in the dropDuplicates."""
+    cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
+    if self_join:
+        cond = cond & (F.col("a._id") < F.col("b._id"))
+        ids = [F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")]
+    else:
+        cond = cond & (F.col("a._id") != F.col("b._id"))
+        ids = [
+            F.least(F.col("a._id"), F.col("b._id")).alias("id_a"),
+            F.greatest(F.col("a._id"), F.col("b._id")).alias("id_b"),
+        ]
+    for k in key_cols:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return a.alias("a").join(b.alias("b"), cond).select(*ids).dropDuplicates(["id_a", "id_b"])
+
+
 def band_candidate_pairs(
     sig: DataFrame, num_hashes: int, bands: int, key_cols: tuple = ()
 ) -> DataFrame:
-    """LSH banding + bucket self-join over a signature table.
-
-    `sig` must carry (_id, _sig: array<long> of length num_hashes).
-    Each signature is cut into `bands` bands of num_hashes/bands rows;
-    a band's bucket key is xxhash64(band, rows...), and candidates are
+    """LSH banding + bucket self-join over a signature table (_id, _sig):
     the distinct (id_a < id_b) pairs colliding in at least one bucket.
 
     This is THE skew point of MinHash dedup at scale: a boilerplate-heavy
@@ -175,20 +213,89 @@ def band_candidate_pairs(
     plan can be asserted without running the full text pipeline.
     """
     banded = banded_signatures(sig, num_hashes, bands, key_cols)
+    return _band_join(banded, banded, key_cols, self_join=True)
 
-    cond = (
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a._id") < F.col("b._id"))
+
+def _est_prune_candidates(
+    cand: DataFrame, sig: DataFrame, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """Signature-estimated Jaccard prune over a candidate pair list.
+
+    Banding can pass far more candidates than true near-dups. Before
+    touching shingle sets, keep only pairs whose signatures agree on at
+    least :func:`_est_cut` of their minhashes: a zip_with equality count,
+    interpreted but over the candidate set only, and the join plan stays
+    2 columns wide. Skipped when the cutoff cannot cut (its two signature
+    joins measured 0.7 s of a ~5 s warm call at 16/4).
+    """
+    est_cut = _est_cut(threshold, num_hashes, bands)
+    if est_cut is None:
+        return cand
+    est = (
+        F.size(
+            F.filter(F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, b: a == b), lambda x: x)
+        ).cast("double")
+        / F.lit(float(num_hashes))
     )
-    for k in key_cols:  # blocked banding: buckets never span blocks
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    # no broadcast hint: AQE auto-broadcasts the signature table while it
+    # fits, and falls back to a shuffle join at corpus scale.
     return (
-        banded.alias("a")
-        .join(banded.alias("b"), cond)
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        cand.join(sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sa")), "id_a")
+        .join(sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sb")), "id_b")
+        .filter(est >= est_cut)
+        .select("id_a", "id_b")
     )
+
+
+def _candidate_ids(cand: DataFrame) -> DataFrame:
+    """Distinct ids of both pair sides: the semi-join key that keeps the
+    verify's shingle work candidate-proportional."""
+    return cand.select(F.col("id_a").alias("_id")).union(cand.select(F.col("id_b"))).distinct()
+
+
+def _shingle_sets(shingle_rows: DataFrame) -> DataFrame:
+    """(_id, _sh, _n) hash sets from exploded (_id, _h) shingle rows.
+    Sets of longs, not strings: primitive-array intersects are ~2x string
+    ones and the shuffle carries 8 B/shingle (exact up to 64-bit hash
+    collisions)."""
+    return (
+        shingle_rows.groupBy("_id")
+        .agg(F.collect_set("_h").alias("_sh"))
+        .select("_id", "_sh", F.size("_sh").alias("_n"))
+    )
+
+
+def _jaccard_join(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard verify: each candidate (id_a, id_b) joined to both
+    sides' sets in ``sets`` (_id, _sh: distinct hash array, _n: its size)
+    and kept at >= ``threshold``. |A∪B| = |A|+|B|-|A∩B|, so one array op
+    runs per pair."""
+    n_int = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
+    return (
+        cand.join(
+            sets.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_n").alias("na")),
+            "id_a",
+        )
+        .join(
+            sets.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_n").alias("nb")),
+            "id_b",
+        )
+        .withColumn("jaccard_sim", n_int / (F.col("na") + F.col("nb") - n_int))
+        .filter(F.col("jaccard_sim") >= threshold)
+        .select("id_a", "id_b", "jaccard_sim")
+    )
+
+
+def _verify_from_base(
+    cand: DataFrame, base: DataFrame, shingle_k: int, threshold: float
+) -> DataFrame:
+    """Exact Jaccard over ``cand``, re-deriving shingles from the doc table
+    ``base`` (_id, _text) below a semi-join on the candidate ids: the
+    explode is candidate-proportional, and the corpus-wide shingle table
+    (~2 B per corpus char, larger than the text) is never cached
+    (OPTIMIZATION_r14.md, "minhash_neardup / pretrain_prep")."""
+    rows = shingle_hash_rows(base.join(_candidate_ids(cand), "_id", "left_semi"), shingle_k)
+    return _jaccard_join(cand, _shingle_sets(rows), threshold)
 
 
 def minhash_candidate_census(
@@ -198,26 +305,23 @@ def minhash_candidate_census(
     band self-join would have to process — ``Σ_buckets C(b, 2)`` over the
     ``(band, bh[, *key_cols])`` group keys — computed with ONE aggregation
     over the already-banded signature rows, none of the quadratic-risk
-    join. The minhash twin of
-    :func:`~devcontainers_etl_node_spark.operators.retrieval.setsim_candidate_census`
-    and the number the r11 1M-doc rung showed growing at exponent 1.97
-    on unblocked fixed-geometry banding (PERF.md): this census IS the
-    floor, measured before paying it.
+    join: the random-collision floor (exponent 1.97 on unblocked
+    fixed-geometry banding at the r11 1M-doc rung, PERF.md), measured
+    before paying it.
 
     ``new_flag_col``: incremental form — when set (a 0/1 column on
     ``banded``), the census counts the all×new join volume per bucket
     (``n_all·n_new − n_new``, self-matches excluded) instead of C(b,2).
 
     Returns ``{raw_band_collisions, n_buckets, max_bucket, banded_rows[,
-    new_banded_rows]}``. ``banded_rows`` (r14) is Σ bucket sizes — the
-    total banded row count, i.e. exactly ``bands`` per signed doc, so a
-    gated caller derives its doc count as ``banded_rows // bands`` from
-    THIS aggregation instead of running a separate count action over the
-    signature table (one fewer job per gated call; ``new_banded_rows``
-    is the Σ of the new-flag, the same identity for the batch side).
-    Cost: one shuffle on the (band, bh) keys the operator shuffles on
-    anyway — measured ~15-20% of the unblocked operator wall at sf0.1
-    (PERF.md r12), and it bounds the stage that is O(n²) at scale.
+    new_banded_rows]}``. ``banded_rows`` is Σ bucket sizes — exactly
+    ``bands`` per signed doc, so a gated caller derives its doc count as
+    ``banded_rows // bands`` from THIS aggregation instead of running a
+    separate count action (``new_banded_rows`` is the same identity for
+    the batch side). Cost: one shuffle on the (band, bh) keys the
+    operator shuffles on anyway — measured ~15-20% of the unblocked
+    operator wall at sf0.1 (PERF.md r12), and it bounds the stage that
+    is O(n²) at scale.
     """
     grp = banded.groupBy(*key_cols, "band", "bh")
     extra: list = []
@@ -249,19 +353,22 @@ def minhash_candidate_census(
     return out
 
 
-def _minhash_budget_error(
+def _enforce_budget(
     census: dict,
     n_docs: int,
     budget: float,
     threshold: float,
     blocked: bool,
-) -> ValueError:
-    """The refusal message for the minhash census gate: the measured
-    volume plus the two mitigations the r11 analysis proved out —
-    blocking (floor becomes O(Σ n_b²)) and a deeper-r geometry from
-    :func:`minhash_geometry` (floor ∝ kappa^r)."""
+) -> None:
+    """The minhash census gate: raise when the raw band collisions exceed
+    ``budget`` per doc, naming the measured volume plus the two
+    mitigations the r11 analysis proved out — blocking (floor becomes
+    O(Σ n_b²)) and a deeper-r geometry from :func:`minhash_geometry`
+    (floor ∝ kappa^r)."""
+    if not n_docs or census["raw_band_collisions"] <= budget * n_docs:
+        return
     geo = minhash_geometry(threshold, target_recall=0.9, n_docs=n_docs)
-    per_doc = census["raw_band_collisions"] / max(n_docs, 1)
+    per_doc = census["raw_band_collisions"] / n_docs
     hint = (
         "tighten block_cols (smaller blocks bound each n_b)"
         if blocked
@@ -269,7 +376,7 @@ def _minhash_budget_error(
         "span blocks, so the floor becomes O(Σ n_b²) (measured 4.0x wall at "
         "1M docs, PERF.md r11)"
     )
-    return ValueError(
+    raise ValueError(
         f"minhash pre-flight budget exceeded: {census['raw_band_collisions']} "
         f"raw band collisions over {n_docs} docs ({per_doc:.1f}/doc > "
         f"{budget}/doc; max bucket {census['max_bucket']}) — this corpus is "
@@ -411,13 +518,9 @@ def applied_partition_plan(
     open_cost_bytes: int | None = None,
 ):
     """Scope-apply :func:`minhash_partition_plan` to the session, restoring
-    the previous conf values on exit — the wiring that closes the r13
-    `weak`: the 4M ladder measured ``UNABLE_TO_ACQUIRE_MEMORY`` at the
-    32-partition session default and a double ``AGGREGATE_OUT_OF_MEMORY``
-    at default 128 MB scan splits (PERF.md r12), and the rule that fixes
-    both was planner output only — no pipeline entry point applied it.
-    ``funnel.run_staged_funnel``, ``queries.catalog:pretrain_prep`` and
-    ``incremental.run_incremental_dedup`` now run their dedup stage inside
+    the previous conf values on exit. ``funnel.run_staged_funnel``,
+    ``queries.catalog:pretrain_prep`` and
+    ``incremental.run_incremental_dedup`` run their dedup stage inside
     this context by default.
 
     The application is MONOTONE toward finer tasks, never coarser:
@@ -492,190 +595,111 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs above `threshold` exact Jaccard.
 
-    ``cross_block_recovery`` (r12, opt-in, requires ``block_cols``):
-    after the blocked pass, run :func:`minhash_crossblock_recovery` —
-    re-band one representative per blocked dup cluster GLOBALLY and
-    exact-verify the expanded cross-cluster candidates — and union the
-    recovered cross-block pairs into the result. The default (False)
-    keeps the blocked contract unchanged: cross-block near-dups out of
-    scope. See the recovery function's docstring for the cost/recall
-    contract (global floor O(n_reps²); rep-level LSH recall).
+    ``cross_block_recovery`` (opt-in, requires ``block_cols``): after the
+    blocked pass, run :func:`minhash_crossblock_recovery` — re-band one
+    representative per blocked dup cluster GLOBALLY and exact-verify the
+    expanded cross-cluster candidates — and union the recovered
+    cross-block pairs into the result. The default (False) keeps the
+    blocked contract: cross-block near-dups out of scope. See the
+    recovery function's docstring for the cost/recall contract (global
+    floor O(n_reps²); rep-level LSH recall).
 
-    ``max_collisions_per_doc`` (r12): an enforced pre-flight budget —
-    the self-protecting shape ``setsim_join_prefix`` already ships,
-    closing the one `weak` the r11 verdict measured. When set, the EXACT
-    band census (:func:`minhash_candidate_census` — Σ C(bucket, 2) over
-    the banding's own group keys, one aggregation over the persisted
-    signature table, none of the quadratic-risk self-join) runs first,
-    and a corpus whose raw band collisions per doc exceed the budget
-    raises ``ValueError`` naming the measured volume, the
+    ``max_collisions_per_doc``: an enforced pre-flight budget. When set,
+    the EXACT band census (:func:`minhash_candidate_census`, one
+    aggregation over the pinned signature table) runs first, and a corpus
+    whose raw band collisions per doc exceed the budget raises
+    ``ValueError`` naming the measured volume, the
     :func:`minhash_geometry` recommendation, and the blocking hint —
-    INSTEAD of silently paying the O(n²) random-collision floor the r11
-    1M-doc rung measured (candidates ×1.97 per decade past ~10^5.7
-    unblocked docs at t=0.5). The measured regime: healthy corpora sit
-    at O(1)-O(10) collisions/doc; past the floor crossover the census
-    reads ~10·n and climbing. None (default) skips the gate — zero cost
-    on the happy path.
+    INSTEAD of silently paying the O(n²) random-collision floor (r11
+    1M-doc rung: candidates ×1.97 per decade past ~10^5.7 unblocked docs
+    at t=0.5). Healthy corpora sit at O(1)-O(10) collisions/doc. None
+    (default) skips the gate.
 
-    ``block_cols`` (r11): BLOCKED banding — LSH buckets never span
-    distinct values of these columns, so only same-block docs can pair.
-    This is the floor mitigation the r11 1M-doc rung points at: the
-    random band-collision floor is O(Σ n_b²) over blocks instead of
-    O(n²) — partitioning a 100 TB corpus by (lang, source, time-window)
-    bounds every n_b, while true near-dups (which overwhelmingly share
-    those attributes) stay detectable. SEMANTIC CHANGE by design:
-    cross-block near-dups are out of scope when blocking is on (that is
-    the contract the caller opts into); NULL block values group
-    together (one null block). The default (None) path is byte-
-    identical to pre-r11 behavior.
+    ``block_cols``: BLOCKED banding — LSH buckets never span distinct
+    values of these columns, so only same-block docs can pair. The random
+    band-collision floor is O(Σ n_b²) over blocks instead of O(n²):
+    partitioning a 100 TB corpus by (lang, source, time-window) bounds
+    every n_b, while true near-dups (which overwhelmingly share those
+    attributes) stay detectable. Cross-block near-dups are out of scope
+    when blocking is on; NULL block values group together (one null
+    block).
 
     Pipeline (each stage codegen'd, shuffle keys are fixed-width hashes):
-      1. explode distinct shingles → (id, shingle) rows;
-      2. one groupBy(id) computing all `num_hashes` minhashes as
-         min(xxhash64(seed_i, shingle)) aggregates — a single shuffle,
-         tight whole-stage-codegen loop (NOT per-row array lambdas, which
-         are interpreted and ~50x slower at sf0.1) — then packed into ONE
-         array column so every downstream join carries plan width 2, not
-         num_hashes+1 (round-2 change: the wide-column est-prune plan was
-         codegen-compile-bound — 13 s of a 41 s cold call; the array form
-         with an interpreted zip_with over candidates only is ~2x faster
-         end-to-end, identical pair set);
+      1. explode shingle hashes → (id, h) rows;
+      2. one groupBy(id) computing all `num_hashes` seeded minhashes
+         (:func:`minhash_signature_table`);
       3. band the signature, explode (id, band, band_hash);
-      4. bucket self-join on (band, band_hash) → candidate pairs;
-      5. exact-Jaccard verify — shingle arrays re-derived only for the
+      4. bucket self-join on (band, band_hash) → candidate pairs, pruned
+         by the signature-estimated Jaccard;
+      5. exact-Jaccard verify — shingle sets re-derived only for the
          (small) candidate set by joining back to the texts.
 
-    Defaults are 32 hashes / 8 bands (r=4): per-band collision curve s^4
-    with 8-way OR-amplification — detection probability at j=0.5 is
-    ~0.40. Passing num_hashes=16, bands=4 halves signature compute and
-    plan width at the SAME per-band curve but HALVES the
-    OR-amplification (detection at j=0.5 drops to ~0.23), i.e. it is a
-    *lower-recall* setting for borderline pairs; on the synthetic
-    corpus the emitted pair set happened to be byte-identical at sf0.1
-    and sf0.01, but that is corpus luck, not a guarantee. The library
-    default stays 32/8 (recall-first); latency-sensitive callers opt
-    into 16/4 explicitly. Round-4 A/B (per-variant codegen warmup,
-    3 reps): 16/4 3.9 s vs 32/8 4.6 s warm at sf0.1 — the doubled
-    signature cost and the tighter est-prune cutoff (0.19 → 0.28,
-    fewer false candidates reaching the exact verify) roughly cancel,
-    so the recall choice, not latency, should pick the setting.
+    Defaults are 32 hashes / 8 bands (r=4): detection probability at
+    j=0.5 is ~0.40. 16/4 halves signature compute at the same per-band
+    curve but halves the OR-amplification (~0.23 at j=0.5), a
+    lower-recall setting; measured 3.9 s vs 4.6 s warm at sf0.1, so the
+    recall choice, not latency, should pick the setting.
 
     Scale: only colliding docs ever meet (no O(n²) stage); AQE skew-join
     splits pathological buckets (boilerplate-heavy crawl shards).
     """
-    # validate the flag combination BEFORE any DataFrame work (r12 advice:
-    # raising after the full LSH pass wasted the entire compute)
+    # validate the flag combination BEFORE any DataFrame work
     if cross_block_recovery and not block_cols:
         raise ValueError(
             "cross_block_recovery=True only applies with block_cols — "
             "the unblocked operator already searches globally"
         )
 
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-    # small single-file inputs arrive as ONE split — spread the (CPU-heavy)
-    # signature compute across the cluster; no-op when the scan already
-    # has enough splits (operators/skew.py:spread).
     from devcontainers_etl_node_spark.operators.skew import spread
 
-    base = spread(base)
+    # small single-file inputs arrive as ONE split: spread the CPU-heavy
+    # signature compute (a no-op when the scan already has enough splits)
+    base = spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
 
-    # shingle generation kept fully inside whole-stage codegen: explode the
-    # position range, then substring — no interpreted array lambdas.
-    # MinHash over the shingle *multiset* equals MinHash over the set (min
-    # is idempotent), so no distinct is needed here. Each shingle is string-
-    # hashed ONCE; the num_hashes seeded values derive from that long via
-    # xxhash64(seed<<48 XOR h) — 1 string hash + num_hashes long hashes per
-    # row instead of num_hashes string hashes. (Verified: identical output
-    # pair set to per-seed string hashing at sf0.1. The tempting
-    # xxhash64(seed, h) seed-chained form is DEGENERATE — 4x the candidate
-    # collisions — the seed must be spread into the input bits, not chained
-    # through the hash state. See PERF.md.)
-    #
-    # r14 job-structure rework (guide §1.2/§2.4; measured jobs 24 -> 10 at
-    # sf0.1 with an identical pair set): the pre-r14 operator persisted
-    # shingle_rows, sig and cand and pinned each with an eager count —
-    # three sequential cache-materialization actions per call. Within ONE
-    # action Spark's exchange/stage reuse already computes each repeated
-    # subtree once (the sig exchange feeds band a/b + est a/b; the cand
-    # dropDuplicates exchange feeds the verify join + both cand_ids arms),
-    # so the ungated path now runs as a single lazy DAG ending at the
-    # localCheckpoint — no persists at all. The verify stage re-derives
-    # candidate shingles from the DOC table after a semi-join on the
-    # candidate ids (below), so the corpus-wide exploded shingle table
-    # never needs to be cached: its only remaining consumer is the
-    # signature aggregate (r15 extends this to the recovery pass — its
-    # rep-signature and verify shingles also re-derive from the doc
-    # table, so NO corpus-wide shingle cache exists on any path). Pins
-    # remain ONLY where a SECOND action must reuse the signatures (the
-    # census gate / recovery pass): shuffle stages are never reused
-    # across actions, and a lazily-persisted frame first touched by a
-    # multi-branch AQE action was measured pathological (66 jobs vs 10 —
-    # plans/r14 experiment), so sig is pinned with an eager
-    # localCheckpoint below.
-    shingle_rows = shingle_hash_rows(base, shingle_k)
-    sig = minhash_signature_table(shingle_rows, num_hashes)
+    # The ungated path is ONE lazy DAG ending at the localCheckpoint: within
+    # one action, exchange reuse computes each repeated subtree once (the
+    # sig exchange feeds band a/b + est a/b; the cand exchange feeds the
+    # verify join + both candidate-id arms), and the verify re-derives its
+    # shingles from the doc table, so no corpus-wide shingle table is ever
+    # cached (OPTIMIZATION_r14.md, "minhash_neardup / pretrain_prep").
+    sig = minhash_signature_table(shingle_hash_rows(base, shingle_k), num_hashes)
     key_cols: tuple = ()
     if block_cols:
-        # one 8-byte block key joined onto the (tiny) signature table —
-        # null-safe: NULL block values coalesce into one shared block
-        blk = df.select(
-            F.col(id_col).alias("_id"),
-            F.xxhash64(
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                    for c in block_cols
-                ]
-            ).alias("_blk"),
-        )
-        sig = sig.join(blk, "_id")
+        # one 8-byte block key joined onto the (tiny) signature table
+        sig = sig.join(df.select(F.col(id_col).alias("_id"), _block_key(block_cols)), "_id")
         key_cols = ("_blk",)
 
     gated = max_collisions_per_doc is not None
-    multi_action = gated or cross_block_recovery
-    if multi_action:
+    if gated or cross_block_recovery:
         # the census (and the recovery pass) are separate actions that
-        # re-read the signatures — pin them. The pin is an EAGER
-        # localCheckpoint, not persist+count: a persisted
-        # InMemoryRelation canonicalizes per consumer, so the main
-        # action's repeated sig subtrees (band self-join a/b, est-prune
-        # x2) lose ReusedExchange and the band join replicates —
-        # measured at the 120k-doc gated rung
-        # (tools/exp_minhash_gated_r14.py, identical 36 587-pair
-        # output): persist pin 42.8-47.4 s / 55 jobs, checkpoint pin
-        # 16.6 s / 18 jobs.
+        # re-read the signatures, and shuffle stages are never reused
+        # across actions — pin them. The pin is an EAGER localCheckpoint,
+        # not persist+count: a persisted InMemoryRelation canonicalizes per
+        # consumer, so the main action's repeated sig subtrees lose
+        # ReusedExchange and the band join replicates (120k-doc gated rung:
+        # 55 jobs vs 18, OPTIMIZATION_r14.md "minhash gated/blocked batch
+        # path").
         sig = sig.localCheckpoint(eager=True)
 
     if gated:
         census = minhash_candidate_census(
             banded_signatures(sig, num_hashes, bands, key_cols), key_cols
         )
-        # n_docs comes out of the census aggregation itself (banding emits
-        # exactly `bands` rows per signed doc), so the budget needs no
-        # separate count action over the signature table (r14).
-        n_docs = census["banded_rows"] // bands
-        if n_docs and census["raw_band_collisions"] > max_collisions_per_doc * n_docs:
-            # sig's checkpoint blocks release via GC/ContextCleaner
-            raise _minhash_budget_error(
-                census, n_docs, max_collisions_per_doc, threshold, bool(block_cols)
-            )
+        # banding emits exactly `bands` rows per signed doc, so n_docs
+        # needs no separate count action over the signature table
+        _enforce_budget(
+            census, census["banded_rows"] // bands, max_collisions_per_doc,
+            threshold, bool(block_cols),
+        )
 
     cand = band_candidate_pairs(sig, num_hashes=num_hashes, bands=bands, key_cols=key_cols)
     cand = _est_prune_candidates(cand, sig, num_hashes, bands, threshold)
-    verified = _exact_jaccard_verify_from_base(cand, base, shingle_k, threshold)
     # Materialize the (small) verified pair list in ONE action.
     # localCheckpoint also truncates the lineage, so callers that embed
     # this result in a bigger DAG (pretrain_prep) don't drag the whole
     # LSH plan along.
-    out = verified.localCheckpoint(eager=True)
+    out = _verify_from_base(cand, base, shingle_k, threshold).localCheckpoint(eager=True)
     if cross_block_recovery:
-        # r15 (verdict item 8): the recovery pass no longer receives (or
-        # needs) a persisted corpus-wide shingle cache — it re-derives rep
-        # shingles and candidate-verify shingles from the DOC table, the
-        # same from-base shape the main verify adopted in r14. The former
-        # MEMORY_AND_DISK persist here held ~2 B per corpus char for the
-        # whole call (the #1 memory liability class the r14 rework evicted
-        # from the main path) to save ONE extra linear explode over the
-        # reps; measured A/B at the 120k rung in OPTIMIZATION_r15.md.
         recovered = minhash_crossblock_recovery(
             df,
             out,
@@ -688,122 +712,8 @@ def minhash_lsh_pairs(
             max_collisions_per_doc=max_collisions_per_doc,
         )
         out = out.unionByName(recovered).localCheckpoint(eager=True)
-    # sig's checkpoint blocks (multi_action) release via GC once the
-    # local ref drops — nothing to unpersist
+    # checkpoint blocks are freed by GC once the local refs drop
     return out
-
-
-def _est_prune_candidates(
-    cand: DataFrame, sig: DataFrame, num_hashes: int, bands: int, threshold: float
-) -> DataFrame:
-    """Signature-estimated Jaccard prune over a candidate pair list.
-
-    Banding can pass far more candidates than true near-dups (vocabulary-
-    heavy corpora collide a lot). Before touching shingle ARRAYS, prune
-    with the signature-estimated Jaccard (fraction of equal minhashes —
-    unbiased estimator, σ ≈ sqrt(j(1-j)/num_hashes)): a zip_with equality
-    count over the two signature arrays. Interpreted, but it runs over the
-    candidate set only (≪ corpus) and keeps the join plan 2 columns wide —
-    measured faster than the codegen'd num_hashes-column sum-of-whens form
-    whose compile time dominated. The cutoff sits ~2.5σ below `threshold`
-    so true positives survive.
-    """
-    est = (
-        F.size(
-            F.filter(F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, b: a == b), lambda x: x)
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    est_cut = max(0.0, threshold - 2.5 * (threshold * (1 - threshold) / num_hashes) ** 0.5)
-    # A band collision already certifies est >= rows_per_band/num_hashes
-    # = 1/bands (those minhashes are equal by construction of the bucket
-    # key), so when est_cut <= 1/bands the prune KEEPS every band
-    # candidate — its two signature joins are pure overhead (measured
-    # 0.7 s of a ~5 s warm call at 16/4). Run it only when it can cut.
-    if est_cut > 1.0 / bands:
-        # no broadcast hint: AQE auto-broadcasts the signature table while
-        # it fits, and falls back to a shuffle join at corpus scale.
-        cand = (
-            cand.join(sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sa")), "id_a")
-            .join(sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sb")), "id_b")
-            .filter(est >= est_cut)
-            .select("id_a", "id_b")
-        )
-    return cand
-
-
-def _exact_jaccard_verify(
-    cand: DataFrame, shingle_rows: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact shingle-set Jaccard over a (persisted) candidate pair list.
-
-    Shingle SETS are materialized just for docs that appear in a
-    candidate pair (semi-join), via the codegen explode+substring path +
-    collect_set — not per-row array lambdas over the whole corpus. Sets
-    are xxhash64-compressed to longs first: primitive-array intersects
-    are ~2x string-array intersects and shrink the set shuffle to
-    8 B/shingle regardless of shingle size (exact up to 64-bit hash
-    collisions, i.e. negligible at any corpus size that fits a cluster);
-    |union| comes from |A|+|B|-|A∩B| so only one array op runs per pair.
-    """
-    cand_ids = cand.select(F.col("id_a").alias("_id")).union(cand.select(F.col("id_b"))).distinct()
-    sh = (
-        shingle_rows.join(cand_ids, "_id", "left_semi")
-        .groupBy("_id")
-        .agg(F.collect_set("_h").alias("_sh"))
-        .select("_id", "_sh", F.size("_sh").alias("_n"))
-    )
-    n_int = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    return (
-        cand.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_n").alias("na")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_n").alias("nb")),
-            "id_b",
-        )
-        .withColumn("jaccard_sim", n_int / (F.col("na") + F.col("nb") - n_int))
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-    )
-
-
-def _exact_jaccard_verify_from_base(
-    cand: DataFrame, base: DataFrame, shingle_k: int, threshold: float
-) -> DataFrame:
-    """Exact shingle-set Jaccard over a candidate pair list, re-deriving
-    shingles from the DOC table (``base``: (_id, _text)) after a semi-join
-    down to the candidate ids — the r14 verify shape for the batch
-    operator. The semi-join runs BELOW the shingle explode, so the
-    explode+hash work is candidate-proportional at any corpus size, and
-    the corpus-wide exploded shingle table (~2 B per corpus char — larger
-    than the text itself) never needs to be persisted for the verify's
-    sake. Values are identical to :func:`_exact_jaccard_verify` over a
-    full shingle table: the semi-join commutes with the per-doc explode,
-    and the set intersect/union arithmetic is unchanged.
-    """
-    cand_ids = cand.select(F.col("id_a").alias("_id")).union(cand.select(F.col("id_b"))).distinct()
-    cand_shingles = shingle_hash_rows(base.join(cand_ids, "_id", "left_semi"), shingle_k)
-    sh = (
-        cand_shingles.groupBy("_id")
-        .agg(F.collect_set("_h").alias("_sh"))
-        .select("_id", "_sh", F.size("_sh").alias("_n"))
-    )
-    n_int = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    return (
-        cand.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_n").alias("na")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_n").alias("nb")),
-            "id_b",
-        )
-        .withColumn("jaccard_sim", n_int / (F.col("na") + F.col("nb") - n_int))
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-    )
 
 
 def minhash_crossblock_recovery(
@@ -816,23 +726,9 @@ def minhash_crossblock_recovery(
     bands: int = 8,
     threshold: float = 0.5,
     max_collisions_per_doc: float | None = None,
-    shingle_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Bounded second pass recovering CROSS-BLOCK near-dup pairs after a
-    blocked :func:`minhash_lsh_pairs` run (r11 verdict task 4).
-
-    ``shingle_rows`` (r13; default flipped r15): an optional ALREADY-
-    MATERIALIZED ``shingle_hash_rows`` table (e.g. a parquet shingle
-    store) — when provided, rep signatures and the exact verify read it
-    instead of re-shingling; the caller keeps ownership. When ``None``
-    (the default, and what ``minhash_lsh_pairs(cross_block_recovery=
-    True)`` now uses), BOTH are re-derived from the doc table below
-    id semi-joins — the reps pay one extra linear explode, the verify is
-    candidate-proportional, and no corpus-wide shingle cache (~2 B per
-    corpus char held for the whole pass — the r12-measured 10M-rung
-    memory liability class) exists at any point. Values are identical
-    either way (same normalization + hash arithmetic; the semi-join
-    commutes with the per-doc explode).
+    blocked :func:`minhash_lsh_pairs` run.
 
     Blocked banding trades cross-block recall for the O(Σ n_b²) floor —
     the right default contract, but some corpora have dup families that
@@ -846,16 +742,10 @@ def minhash_crossblock_recovery(
          every doc not in any blocked pair is its own singleton cluster;
       2. ONE representative per cluster (the component's min id) is
          re-banded GLOBALLY (no blocks) at the same geometry — the
-         global floor is O(n_reps²), and n_reps = n − (pairs the
-         blocked pass merged WITHIN blocks). Measured honestly (PERF.md
-         r12): a mostly-unique corpus keeps n_reps ≈ n (95%), and even
-         a 50%-dup corpus whose families FRAGMENT across the block key
-         keeps n_reps at 77% — the rep pass gets cheap exactly where
-         blocking already did the merging, and costs ≈ the unblocked
-         floor over reps where blocking dropped the most. That honesty
-         is the point; ``max_collisions_per_doc`` gates THIS pass too,
-         and family-consistent block keys (source/time-window) shrink
-         both the drop and the rep count;
+         global floor is O(n_reps²). Measured (PERF.md r12): a
+         mostly-unique corpus keeps n_reps ≈ n (95%), a 50%-dup corpus
+         whose families fragment across the block key 77% — so
+         ``max_collisions_per_doc`` gates THIS pass too;
       3. colliding rep pairs (est-pruned) expand to member candidate
          pairs via the cluster membership (Σ |A|·|B| over colliding
          cluster pairs — bounded by true family structure, since
@@ -864,6 +754,10 @@ def minhash_crossblock_recovery(
          and the remainder gets the standard exact shingle-Jaccard
          verify — every emitted pair is TRUE (≥ threshold), never an
          LSH guess.
+
+    Rep signatures and verify shingles are both re-derived from the doc
+    table below id semi-joins, so no corpus-wide shingle cache exists at
+    any point of the pass.
 
     Recall contract: a cross-block pair is recoverable when the two
     docs' cluster REPS collide in some band — rep-level LSH recall, not
@@ -884,12 +778,9 @@ def minhash_crossblock_recovery(
     # searchable — a cross-block family can be all-singletons under
     # blocking, e.g. a 2-member family split across two blocks)
     cc = connected_components_star(blocked_pairs.select("id_a", "id_b"))
-    # r14: cross-action pins are eager localCheckpoints, not persists —
-    # the same ReusedExchange-canonicalization finding as the main
-    # operator (tools/exp_minhash_gated_r14.py: checkpoint pin 2.6-2.9x
-    # faster, 55 -> 18 jobs); membership feeds reps here plus BOTH
-    # expansion arms of the candidate action, sig feeds the band
-    # self-join + est-prune.
+    # cross-action pins are eager localCheckpoints (see minhash_lsh_pairs):
+    # membership feeds reps here plus BOTH expansion arms of the candidate
+    # action, sig feeds the band self-join + est-prune.
     membership = (
         base.select("_id")
         .join(cc.withColumnRenamed("node", "_id"), "_id", "left")
@@ -897,26 +788,14 @@ def minhash_crossblock_recovery(
         .localCheckpoint(eager=True)
     )
     reps = membership.select(F.col("_rep").alias("_id")).distinct()
-
-    # rep shingles: from the caller's shingle table when one is supplied,
-    # otherwise re-derived from the DOC table below the semi-join (r15 —
-    # the default path carries NO corpus-wide shingle cache; one extra
-    # linear explode over the reps instead of a ~2 B/char persist held
-    # across the whole pass, the same trade the r14 main-path verify made)
-    rep_shingle_src = (
-        shingle_rows.join(reps, "_id", "left_semi")
-        if shingle_rows is not None
-        else shingle_hash_rows(base.join(reps, "_id", "left_semi"), shingle_k)
-    )
-    sig = minhash_signature_table(rep_shingle_src, num_hashes).localCheckpoint(eager=True)
+    sig = minhash_signature_table(
+        shingle_hash_rows(base.join(reps, "_id", "left_semi"), shingle_k), num_hashes
+    ).localCheckpoint(eager=True)
     n_reps = sig.count()
 
     if max_collisions_per_doc is not None:
         census = minhash_candidate_census(banded_signatures(sig, num_hashes, bands))
-        if n_reps and census["raw_band_collisions"] > max_collisions_per_doc * n_reps:
-            raise _minhash_budget_error(
-                census, n_reps, max_collisions_per_doc, threshold, blocked=False
-            )
+        _enforce_budget(census, n_reps, max_collisions_per_doc, threshold, blocked=False)
 
     rep_cand = band_candidate_pairs(sig, num_hashes=num_hashes, bands=bands)
     rep_cand = _est_prune_candidates(rep_cand, sig, num_hashes, bands, threshold)
@@ -939,13 +818,7 @@ def minhash_crossblock_recovery(
         .join(blocked_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
         .localCheckpoint(eager=True)
     )
-
-    verified = (
-        _exact_jaccard_verify(cand, shingle_rows, threshold)
-        if shingle_rows is not None
-        else _exact_jaccard_verify_from_base(cand, base, shingle_k, threshold)
-    )
-    return verified.localCheckpoint(eager=True)
+    return _verify_from_base(cand, base, shingle_k, threshold).localCheckpoint(eager=True)
 
 
 def store_bucket_expr(col: str | Column, n_buckets: int) -> Column:
@@ -975,95 +848,71 @@ def minhash_incremental_pairs(
     existing_shingles: DataFrame | None = None,
     store_buckets: int | None = None,
     stats: dict | None = None,
-) -> tuple[DataFrame, DataFrame, Callable[[], None]]:
+) -> tuple[DataFrame, DataFrame]:
     """Incremental MinHash dedup: near-dup pairs INVOLVING newly arrived
     docs, reusing the persisted signature table of the historical corpus.
 
-    ``store_buckets`` (r14, the bucketed-store layout): set when the
-    snapshot is stored as BUCKETED delta dirs (``incremental.py`` v2
-    layout — every store row carries an ``_bkt`` partition column equal
-    to ``pmod(xxhash64(cast(_id as string)), store_buckets)``; the
-    string cast makes the hash id-type-stable, the lesson of the r13
-    verify-sink advice). Three behavior changes, each killing one of the
-    per-step O(history) terms the r14 cadence rung measured:
+    ``store_buckets`` (the bucketed-store layout): the snapshot is stored
+    as BUCKETED delta dirs whose rows carry an ``_bkt`` partition column
+    equal to :func:`store_bucket_expr`. Three behavior changes, each
+    removing a per-step O(history) term:
 
-    - **verify prune**: the old-side candidate semi-join over
-      ``existing_shingles`` — the LARGEST store, ~2 B per corpus char
-      on-disk — is preceded by an ``_bkt IN (candidate buckets)``
-      partition filter, so the scan reads O(candidates) bytes instead of
-      the whole shingle store (the same listing-time prune the streaming
-      slim-verify sink measured at 1.01% selected on a 5M-doc store).
-      The candidate bucket list is bounded by ``min(|cand_ids|,
-      store_buckets)`` rows — the one driver-side collect this adds.
+    - **verify prune**: the old-side semi-join over ``existing_shingles``
+      (the largest store, ~2 B per corpus char) is preceded by an ``_bkt
+      IN (candidate buckets)`` partition filter, so the scan reads
+      O(candidates) bytes; the bucket list (≤ ``store_buckets`` rows) is
+      the one driver-side collect this adds.
     - **persisted block values**: in blocked mode ``existing_sigs``
-      already carries ``_blk`` (written with the sigs at commit time),
-      so the O(history) block-value join against ``existing_docs`` — and
-      the coverage gate it needed — disappear; ``existing_docs`` is not
-      consulted at all. Only NEW rows derive ``_blk`` from ``new_docs``.
+      already carries ``_blk``, so ``existing_docs`` is not consulted at
+      all; only NEW rows derive ``_blk`` from ``new_docs``.
     - **delta return**: the second element of the returned tuple is the
-      NEW batch's signature rows (with ``_blk`` when blocked) — the
-      O(batch) delta the caller appends — instead of the merged
-      history∪batch table it would rewrite in full.
+      NEW batch's signature rows (with ``_blk`` when blocked), the
+      O(batch) delta the caller appends.
 
-    What stays O(history) per step, deliberately: banding + census run
-    over the full compact signature union (~76 B/doc on-disk) — band
-    keys must be recomputed because a bucket-level prune cannot help
-    (a batch's band keys touch every hash bucket once the batch exceeds
-    ~store_buckets/8 docs), and the r13 ladder measured this linear
-    signature/banding stage as exactly the wall that scales (α = 1.008
-    at 4M→10M). The terms this mode removes are the ones that scale
-    with corpus TEXT volume, not doc count.
+    Banding + census still run over the full compact signature union
+    (~76 B/doc on-disk): a batch's band keys touch every hash bucket, so
+    a bucket-level prune cannot help there.
 
-    ``existing_shingles`` (r13, the space-for-time option): the persisted
+    ``existing_shingles`` (the space-for-time option): the persisted
     exploded ``(_id, _h)`` shingle table of the historical corpus (same
     ``shingle_k``, same hash arithmetic — ``shingle_hash_rows`` output).
     When provided, the verify stage's old side reads candidate rows from
-    it by semi-join instead of re-shingling ``old_docs`` text — the
-    largest single term of the per-batch step (measured ~2 s of the
-    ~5.2 s sf0.1 step, PERF.md r12 cadence split). Coverage contract:
-    it must contain rows for EVERY id in ``existing_sigs`` (the snapshot
-    writer in ``incremental.py`` maintains this by construction — both
-    tables commit in the same version); a missing id would silently
-    drop that doc's pairs, so hand-fed callers own the invariant.
+    it by semi-join instead of re-shingling ``old_docs`` text (~2 s of
+    the ~5.2 s sf0.1 step, PERF.md r12). Coverage contract: it must
+    contain rows for EVERY id in ``existing_sigs`` (``incremental.py``
+    commits both tables in one version); a missing id would silently
+    drop that doc's pairs.
     ``existing_docs`` is then only consulted for block values (blocked
     mode); unblocked callers may pass an empty frame.
 
-    ``max_collisions_per_doc`` (r12): pre-flight budget, same contract
-    as :func:`minhash_lsh_pairs` but counted per NEW doc — the exact
-    all×new band-join volume (``Σ_buckets n_all·n_new − n_new``, one
-    aggregation over the banded union, via
-    :func:`minhash_candidate_census`) must not exceed
-    ``budget × |new_docs|``, else ``ValueError`` with the measured
-    volume and the blocking/geometry recommendation. This is the gate
-    that protects the CADENCE case: a snapshot that has quietly grown
-    past the floor crossover makes every later batch pay O(n·m) random
-    collisions — the census reads that before the join does.
+    ``max_collisions_per_doc``: pre-flight budget, same contract as
+    :func:`minhash_lsh_pairs` but counted per NEW doc — the exact
+    all×new band-join volume (``Σ_buckets n_all·n_new − n_new``) must
+    not exceed ``budget × |new_docs|``. It protects the cadence: a
+    snapshot grown past the floor crossover makes every later batch pay
+    O(n·m) random collisions, and the census reads that before the join.
 
-    ``block_cols`` (r11): blocked banding, same contract as
+    ``block_cols``: blocked banding, same contract as
     :func:`minhash_lsh_pairs` — buckets never span blocks, so the
     per-batch candidate floor is O(Σ n_b · m_b) (old×new within blocks)
-    instead of O(n·m).  Block values are read from BOTH doc sides (the
-    persisted signature snapshot stays block-free — blocking is a query
-    choice, not a snapshot property).
+    instead of O(n·m). Without ``store_buckets`` block values are read
+    from BOTH doc sides (the legacy signature snapshot stays
+    block-free — blocking is a query choice, not a snapshot property).
 
-    The production cadence at 100 TB is not "re-dedup the world nightly":
-    signatures are computed once per document ever (the dominant cost —
-    a full corpus scan + shingle pass), persisted (~num_hashes longs/doc,
-    built by ``minhash_signature_table``), and each ingest batch only
-    (a) signs ITS OWN docs, (b) band-joins new against old∪new, and
-    (c) exact-verifies the candidates — re-shingling OLD text only for
-    the (tiny) candidate set via a semi-join, never corpus-wide.
-    Old×old pairs were already reported by earlier runs and are excluded
-    by construction (the band join keeps pairs with ≥1 new side).
+    The production cadence at 100 TB: signatures are computed once per
+    document ever (the dominant cost) and persisted; each ingest batch
+    only (a) signs ITS OWN docs, (b) band-joins new against old∪new, and
+    (c) exact-verifies the candidates, touching OLD text only for the
+    candidate set. Old×old pairs were reported by earlier runs and never
+    form (the band join keeps pairs with ≥1 new side).
 
-    Returns ``(pairs, merged_sigs, release)``: `pairs` is checkpointed
-    (safe to consume after the persisted intermediates are released);
-    `merged_sigs` is the signature table for the NEXT run and rides the
-    batch signatures STILL CACHED from this run — writing it as the new
-    snapshot re-signs nothing (each doc is shingled+signed once, ever).
-    Call ``release()`` after that write (or after discarding merged_sigs)
-    to drop the cache. Parity is pinned in tests: pairs == the full-batch
-    pair set restricted to pairs touching a new id, and merged_sigs == a
+    Returns ``(pairs, merged_sigs)``: `pairs` is checkpointed; `merged_sigs`
+    is the signature table for the NEXT run and reads the batch
+    signatures checkpointed by this run — writing it as the new snapshot
+    re-signs nothing (each doc is shingled+signed once, ever). The
+    checkpoint blocks are freed by GC once the caller drops the frames.
+    Parity is pinned in tests: pairs == the full-batch pair set
+    restricted to pairs touching a new id, and merged_sigs == a
     from-scratch rebuild.
 
     ``new_docs`` ids must be disjoint from ``existing_sigs`` ids —
@@ -1082,23 +931,15 @@ def minhash_incremental_pairs(
     new_base = spread(
         new_docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
     )
-    # r14: the batch pins are eager localCheckpoints, NOT persist+count.
-    # Both are read by several consumers across actions (id gate, band
-    # join, verify, merged snapshot), but a persisted InMemoryRelation is
-    # canonicalized per consumer (column pruning is baked into the cached
-    # plan reference), so the single verify action's repeated cand/sh
-    # subtrees do NOT hit ReusedExchange and the band join replicates —
-    # the measured 57-job fragmentation. A checkpointed frame is a plain
-    # RDD scan that canonicalizes identically everywhere: measured at the
-    # 120k-doc rung (tools/exp_incr_scale_r14.py, interleaved, identical
-    # 293 668-pair output) persist-pinned r14 = 45-47 s / 57 jobs,
-    # pre-r14 eager-persist = 60-77 s / 85 jobs, checkpoint-pinned =
-    # **16-24 s / 22 jobs**. Same once-ever signing contract: the
-    # checkpoint materializes here, merged_sigs replays the blocks.
-    # (Trade-off, documented: localCheckpoint forfeits lineage-based
-    # executor-loss recovery for these blocks — at cluster scale the
-    # production cadence persists the signature snapshot as parquet
-    # anyway, which is the durable equivalent.)
+    # The batch pins are eager localCheckpoints, NOT persist+count: both
+    # are read by several consumers across actions (id gate, band join,
+    # verify, merged snapshot), and a persisted InMemoryRelation is
+    # canonicalized per consumer, so the verify action's repeated cand/sh
+    # subtrees would miss ReusedExchange and the band join would replicate
+    # (120k-doc rung: 22 jobs vs 57, OPTIMIZATION_r14.md
+    # "minhash_incremental"). localCheckpoint forfeits lineage-based
+    # executor-loss recovery for these blocks; the production cadence
+    # persists the signature snapshot as parquet, the durable equivalent.
     new_shingles = shingle_hash_rows(new_base, shingle_k).localCheckpoint(eager=True)
     new_sigs = minhash_signature_table(new_shingles, num_hashes).localCheckpoint(eager=True)
 
@@ -1106,11 +947,12 @@ def minhash_incremental_pairs(
     # ~num_hashes longs/doc, far cheaper than the corruption it prevents):
     # a re-submitted batch must fail loudly, not silently double-sign.
     # In the BLOCKED path the same action also checks new_docs for
-    # duplicate id ROWS (r14 advice): the block join below is keyed on
-    # new_docs rows, so a duplicate id would fan out the banded batch —
-    # inflating the census, the budget denominator, and the band join —
-    # where the unblocked path's signature groupBy collapses it. The two
-    # checks ride ONE union action (no extra job per cadence step).
+    # duplicate id ROWS: the block join below is keyed on new_docs rows,
+    # so a duplicate id would fan out the banded batch — inflating the
+    # census, the budget denominator, and the band join — where the
+    # unblocked path's signature groupBy collapses it. The union is
+    # ordered ("committed" sorts before "dup_in_batch"), so a batch with
+    # both faults always raises the committed-id error.
     bad = new_sigs.join(existing_sigs.select("_id"), "_id", "left_semi").select(
         "_id", F.lit("committed").alias("_why")
     )
@@ -1120,13 +962,11 @@ def minhash_incremental_pairs(
             .agg(F.count(F.lit(1)).alias("_c"))
             .filter(F.col("_c") > 1)
             .select("_id", F.lit("dup_in_batch").alias("_why"))
-        )
+        ).orderBy("_why")
     bad_rows = bad.limit(5).collect()
     dup_ids = [r._id for r in bad_rows if r._why == "committed"]
     batch_dups = [r._id for r in bad_rows if r._why == "dup_in_batch"]
     if dup_ids:
-        # checkpoint blocks release via GC/ContextCleaner once these
-        # frames go out of scope — nothing to unpersist
         raise ValueError(
             f"new_docs ids already present in the committed snapshot (e.g. {dup_ids}); "
             "re-submitting a committed batch would duplicate signature rows — "
@@ -1142,17 +982,12 @@ def minhash_incremental_pairs(
 
     key_cols: tuple = ()
     if block_cols:
-        blk_expr = F.xxhash64(
-            *[
-                F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                for c in block_cols
-            ]
-        ).alias("_blk")
+        blk_expr = _block_key(block_cols)
         if store_buckets:
             # bucketed store: history block values were PERSISTED with the
             # sigs at commit time (coverage by construction — same-version
             # write), so only the batch derives _blk and existing_docs is
-            # never consulted. This kills the O(history) block join below.
+            # never consulted.
             new_sigs_banding = new_sigs.join(
                 new_docs.select(F.col(id_col).alias("_id"), blk_expr), "_id"
             )
@@ -1161,17 +996,15 @@ def minhash_incremental_pairs(
             )
         else:
             # block values come from the DOC sides (old ∪ new) — the
-            # legacy signature snapshot stays block-free; null blocks
-            # group together
+            # legacy signature snapshot stays block-free
             blk = (
                 existing_docs.select(F.col(id_col).alias("_id"), blk_expr)
                 .unionByName(new_docs.select(F.col(id_col).alias("_id"), blk_expr))
             )
-            # coverage gate (r12, advice): the block join below is INNER on
-            # the doc sides — a persisted signature id missing from
-            # existing_docs would silently drop out of the band join, losing
-            # old-vs-new coverage with no error. Fail loudly instead (same
-            # cheap limit(5) shape as the id-disjointness gate above).
+            # coverage gate: the block join below is INNER on the doc
+            # sides — a persisted signature id missing from existing_docs
+            # would silently drop out of the band join, losing old-vs-new
+            # coverage with no error. Fail loudly instead.
             uncovered = [
                 r._id
                 for r in existing_sigs.select("_id")
@@ -1223,83 +1056,40 @@ def minhash_incremental_pairs(
             new_flag_col="_is_new",
         )
         # the batch's doc count falls out of the same census aggregation
-        # (bands rows per signed doc) — no separate count action (r14)
-        n_new = census["new_banded_rows"] // bands
-        if n_new and census["raw_band_collisions"] > max_collisions_per_doc * n_new:
-            raise _minhash_budget_error(
-                census, n_new, max_collisions_per_doc, threshold, bool(block_cols)
-            )
+        # (bands rows per signed doc) — no separate count action
+        _enforce_budget(
+            census, census["new_banded_rows"] // bands, max_collisions_per_doc,
+            threshold, bool(block_cols),
+        )
 
-    # band join: ALL (old∪new) against NEW only — old×old pairs never form.
-    # Pair order is normalized (least, greatest) because an old id may be
-    # larger or smaller than a new id; new×new pairs arise twice (once per
-    # orientation) and collapse in the dropDuplicates.
-    banded_all = banded_signatures(all_sigs, num_hashes, bands, key_cols)
-    banded_new = banded_signatures(new_sigs_banding, num_hashes, bands, key_cols)
-    cond = (
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a._id") != F.col("b._id"))
+    # band join: ALL (old∪new) against NEW only — old×old pairs never form
+    cand = _band_join(
+        banded_signatures(all_sigs, num_hashes, bands, key_cols),
+        banded_signatures(new_sigs_banding, num_hashes, bands, key_cols),
+        key_cols,
+        self_join=False,
     )
-    for k in key_cols:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    cand = (
-        banded_all.alias("a")
-        .join(banded_new.alias("b"), cond)
-        .select(
-            F.least(F.col("a._id"), F.col("b._id")).alias("id_a"),
-            F.greatest(F.col("a._id"), F.col("b._id")).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = (
-        F.size(
-            F.filter(F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, b: a == b), lambda x: x)
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    est_cut = max(0.0, threshold - 2.5 * (threshold * (1 - threshold) / num_hashes) ** 0.5)
-    # same no-op-prune skip as minhash_lsh_pairs: a band collision already
-    # certifies est >= 1/bands, so below that cutoff the est joins keep
-    # everything and only burn time
-    if est_cut > 1.0 / bands:
-        cand = (
-            cand.join(all_sigs.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sa")), "id_a")
-            .join(all_sigs.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sb")), "id_b")
-            .filter(est >= est_cut)
-            .select("id_a", "id_b")
-        )
-    # r14: the candidate list needs an eager pin ONLY when a separate
-    # action reads it before the verify (the bucketed-store path collects
-    # the candidate bucket list below — shuffle stages are never reused
-    # across actions). Otherwise the verify is ONE action and exchange
-    # reuse computes the band join / est joins once (jobs measured down
-    # with an identical pair set — plans/r14 experiment). The pin is an
-    # eager localCheckpoint, not persist+count: the verify action
-    # references cand three more times (join input + both cand_ids arms)
-    # and a persisted pin loses ReusedExchange per the canonicalization
-    # finding (tools/exp_minhash_gated_r14.py).
-    cand_pinned = bool(store_buckets)
-    if cand_pinned:
+    cand = _est_prune_candidates(cand, all_sigs, num_hashes, bands, threshold)
+    # the candidate list needs an eager pin ONLY when a separate action
+    # reads it before the verify (the bucketed-store path collects the
+    # candidate bucket list below — shuffle stages are never reused across
+    # actions). Otherwise the verify is ONE action and exchange reuse
+    # computes the band join / est joins once.
+    if store_buckets:
         cand = cand.localCheckpoint(eager=True)
 
     # exact verify: shingle sets for candidate docs only — new side from
-    # the already-persisted new shingle rows, old side re-shingled from
-    # existing_docs AFTER a semi-join down to candidate members (the only
-    # touch of historical text, proportional to candidates, not corpus).
-    cand_ids = cand.select(F.col("id_a").alias("_id")).union(cand.select(F.col("id_b"))).distinct()
+    # the checkpointed new shingle rows, old side from the persisted
+    # shingle store or re-shingled from existing_docs AFTER a semi-join
+    # down to candidate members (proportional to candidates, not corpus).
+    cand_ids = _candidate_ids(cand)
     if existing_shingles is not None:
-        # persisted-shingle path: candidate old-side rows come from the
-        # snapshot's shingle table — no historical TEXT is touched at all
         shingle_src = existing_shingles
         if store_buckets:
             # bucketed store: partition-prune the shingle scan to the
-            # candidate ids' buckets BEFORE the row-level semi-join — the
-            # store is ~2 B per corpus char, the largest per-step read,
-            # and candidates are batch-shaped, so selected bytes are
-            # O(candidates) not O(corpus). The bucket list is bounded by
-            # min(|cand_ids|, store_buckets) values (new-side ids add a
-            # few never-matching buckets rather than an extra filter job).
+            # candidate ids' buckets BEFORE the row-level semi-join, so
+            # selected bytes are O(candidates) not O(corpus). New-side ids
+            # add a few never-matching buckets rather than an extra job.
             cand_buckets = [
                 r._b
                 for r in cand_ids.select(
@@ -1322,50 +1112,18 @@ def minhash_incremental_pairs(
         old_cand_shingles = shingle_hash_rows(
             old_base.join(cand_ids, "_id", "left_semi"), shingle_k
         )
-    # `sh` feeds BOTH sides of the verify join; its groupBy exchange is
-    # reused within the single verify action (r14 — the former eager
-    # persist+count pinned it across what used to be TWO actions, the
-    # cand.count plus the checkpoint; with the candidate pin gone the
-    # whole verify is one action and the old-side text re-derivation
-    # runs once via exchange reuse, measured below in PERF/minibench).
-    sh = (
-        new_shingles.join(cand_ids, "_id", "left_semi")
-        .unionByName(old_cand_shingles)
-        .groupBy("_id")
-        .agg(F.collect_set("_h").alias("_sh"))
-        .select("_id", "_sh", F.size("_sh").alias("_n"))
+    # the sets feed BOTH sides of the verify join; their groupBy exchange
+    # is reused within the single verify action
+    sets = _shingle_sets(
+        new_shingles.join(cand_ids, "_id", "left_semi").unionByName(old_cand_shingles)
     )
-    n_int = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    verified = (
-        cand.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_n").alias("na")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_n").alias("nb")),
-            "id_b",
-        )
-        .withColumn("jaccard_sim", n_int / (F.col("na") + F.col("nb") - n_int))
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-    pairs = verified.select("id_a", "id_b", "jaccard_sim").localCheckpoint(eager=True)
+    pairs = _jaccard_join(cand, sets, threshold).localCheckpoint(eager=True)
     if store_buckets:
         # bucketed store: the caller appends DELTAS, never rewrites the
         # snapshot — return only the batch's rows (with _blk when blocked,
-        # the persisted-block-value contract above). Rides the cache.
-        merged_sigs = new_sigs_banding if block_cols else new_sigs
-    else:
-        # merged_sigs reuses the CACHED batch signatures — the snapshot write
-        # replays the cache, not the shingle+sign pipeline (sign once, ever).
-        merged_sigs = existing_sigs.select("_id", "_sig").unionByName(new_sigs)
-    def release() -> None:
-        # kept for API stability: the r14 checkpoint pins free their
-        # blocks via GC/ContextCleaner when the returned frames are
-        # dropped (callers already gc between reps); there is no cache
-        # left to unpersist eagerly.
-        return None
-
-    return pairs, merged_sigs, release
+        # the persisted-block-value contract above)
+        return pairs, new_sigs_banding if block_cols else new_sigs
+    return pairs, existing_sigs.select("_id", "_sig").unionByName(new_sigs)
 
 
 def ngram_jaccard_pairs(
@@ -1404,7 +1162,7 @@ def ngram_jaccard_pairs(
     ONE core for single-split inputs — and both self-join sides recompute
     the chain again (measured 12-30 s -> ~2 s at 5k docs). The returned
     pair list is itself checkpointed so composing queries don't drag the
-    join lineage along; checkpoint blocks are released when the
+    join lineage along; checkpoint blocks are freed when the
     DataFrames are garbage-collected.
 
     ``prefix_filter=True`` adds AllPairs-style candidate pruning for
@@ -1419,16 +1177,14 @@ def ngram_jaccard_pairs(
     set only. Lossless (Bayardo et al., WWW'07); pair set is asserted
     identical to the inverted-index path in tests.
 
-    ``max_collisions_per_doc`` (r15, opt-in — default None preserves the
-    historical behavior of every caller): the same census/budget refusal
-    ``minhash_lsh_pairs`` enforces, applied to the posting lists this
-    operator actually self-joins (raw grams, or the rarest-first prefixes
-    when ``prefix_filter=True``). Σ C(posting,2) is computed with one
-    linear aggregation BEFORE the join; if it exceeds
-    ``max_collisions_per_doc × n_docs`` the operator raises with the
-    measured volume and mitigations instead of launching a quadratic
-    stage — the planted-boilerplate failure mode (one shared header gram
-    in 10^5 docs = C(10^5,2) joined rows) is refused, not attempted.
+    ``max_collisions_per_doc`` (opt-in; None skips the gate): the census
+    refusal ``minhash_lsh_pairs`` enforces, applied to the posting lists
+    this operator self-joins (raw grams, or the rarest-first prefixes).
+    Σ C(posting,2) is computed with one linear aggregation BEFORE the
+    join; above ``max_collisions_per_doc × n_docs`` the operator raises
+    with the measured volume and mitigations instead of launching a
+    quadratic stage (one shared header gram in 10^5 docs = C(10^5,2)
+    joined rows).
     """
     # shingle sets are xxhash64-compressed to sorted distinct long arrays
     # once per row: 8 B/shingle regardless of shingle text size.
@@ -1455,8 +1211,8 @@ def ngram_jaccard_pairs(
     )
 
     def _gate(postings: DataFrame, joined_on: str) -> None:
-        # census/budget refusal (r14 verdict item 9 — the same self-
-        # protection minhash_lsh_pairs has): Σ_buckets C(b,2) over the
+        # census/budget refusal (the same self-protection
+        # minhash_lsh_pairs has): Σ_buckets C(b,2) over the
         # (block, gram) posting lists IS the raw row count the self-join
         # below must process (the ratio filter prunes inside the join,
         # so this is the exact upper bound). One aggregation over rows
@@ -1540,6 +1296,10 @@ def ngram_jaccard_pairs(
         .select("_id", "_blk", "_n", "_g")
     )
     if max_collisions_per_doc is not None:
+        # the gate and the self-join are two actions: pin the prefixes so
+        # both read one rarest-first ranking instead of each re-running
+        # the gram explode, the df aggregate and the window
+        prefix = prefix.localCheckpoint(eager=True)
         _gate(prefix, "prefix")
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
@@ -1554,21 +1314,7 @@ def ngram_jaccard_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     # exact verify: sorted hash arrays fetched for candidate docs only
-    n_int = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    return (
-        cand.join(
-            base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_n").alias("na")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_n").alias("nb")),
-            "id_b",
-        )
-        .withColumn("jaccard_sim", n_int / (F.col("na") + F.col("nb") - n_int))
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-        .localCheckpoint(eager=True)
-    )
+    return _jaccard_join(cand, base, threshold).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------

@@ -8706,10 +8706,7 @@ def minhash_incremental(spark: SparkSession, sf: str) -> DataFrame:
     mid, old_sigs = _incremental_history_snapshot(spark, sf)
     old_docs = docs.filter(F.col("doc_id") <= mid)
     new_docs = docs.filter(F.col("doc_id") > mid)
-    pairs, _sigs, release = dedup.minhash_incremental_pairs(
-        old_docs, old_sigs, new_docs, threshold=0.5
-    )
-    release()  # pairs is eagerly checkpointed; the sig cache can go now
+    pairs, _sigs = dedup.minhash_incremental_pairs(old_docs, old_sigs, new_docs, threshold=0.5)
     return pairs
 
 
@@ -9012,7 +9009,7 @@ def dataset_card(spark: SparkSession, sf: str) -> DataFrame:
     source contributes, its language spread, and its length envelope.
     All counts integer-exact; one aggregate with map-side combine on the
     handful of source keys. At 100 TB this is the query that runs LAST
-    in a curation pass and gets pasted into the release notes — cheap by
+    in a curation pass and gets pasted into the changelog — cheap by
     construction because it touches only (source, lang, two lengths) per
     doc, never the text twice."""
     docs = table(spark, sf, "documents").filter(F.length(F.trim("text")) > 0)

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from devcontainers_etl_node_spark.operators import dedup as dd
+
 
 def deduped_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Replay-safe dedup on event_id (reference replays from offset 0 every
@@ -211,13 +213,22 @@ def _interval_ms(interval: str) -> int:
 
 
 def _shingle_set_expr(text, shingle_k: int):
-    """Distinct xxhash64'd char-k-gram set of (whitespace-normalized)
-    text — the exact arithmetic of the batch verify
-    (operators/dedup.py:shingle_hash_rows), as one Column expression."""
-    nrm = F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
-    pos = F.sequence(F.lit(1), F.greatest(F.length(nrm) - (shingle_k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(pos, lambda p: F.xxhash64(nrm.substr(p, F.lit(shingle_k))))
+    """Distinct shingle-hash set of the text — the batch verify's
+    arithmetic (operators/dedup.py core), as one Column expression."""
+    return F.array_distinct(dd._shingle_hash_array(dd._normalized(text), shingle_k))
+
+
+def _jaccard_kept(joined: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard_sim) rows of ``joined`` at >= ``threshold``,
+    scored from the two shingle sets ``_sha``/``_shb`` each row carries."""
+    n_int = F.size(F.array_intersect(F.col("_sha"), F.col("_shb"))).cast("double")
+    union = F.size("_sha") + F.size("_shb") - n_int
+    return (
+        joined.withColumn(
+            "jaccard_sim", F.when(union > 0, n_int / union).otherwise(F.lit(0.0))
+        )
+        .filter(F.col("jaccard_sim") >= threshold)
+        .select("id_a", "id_b", "jaccard_sim")
     )
 
 
@@ -361,15 +372,7 @@ def minhash_slim_verify_sink(
                 store.select(F.col("_sid").alias("id_b"), sh.alias("_shb")), "id_b"
             )
         )
-        n_int = F.size(F.array_intersect(F.col("_sha"), F.col("_shb"))).cast("double")
-        union = F.size("_sha") + F.size("_shb") - n_int
-        pairs = (
-            joined.withColumn(
-                "jaccard_sim", F.when(union > 0, n_int / union).otherwise(F.lit(0.0))
-            )
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select("id_a", "id_b", "jaccard_sim")
-        )
+        pairs = _jaccard_kept(joined, threshold)
         pairs.write.mode("overwrite").parquet(out_dir)
         try:
             selected = (
@@ -496,7 +499,7 @@ def streaming_minhash_neardup_pairs(
     the per-partition build side micro-batch-sized, and never sorts the
     corpus-sized store side.
 
-    CHECKPOINT COMPATIBILITY (r12 release note): ``num_hashes``/``bands``
+    CHECKPOINT COMPATIBILITY (r12): ``num_hashes``/``bands``
     are part of the CHECKPOINT contract, not just the output contract —
     the state is keyed by band hash, so restarting an existing
     checkpoint under a different geometry orphans ALL prior state
@@ -530,19 +533,12 @@ def streaming_minhash_neardup_pairs(
     slim = doc_store is not None or slim_candidates
     rows_per_band = num_hashes // bands
     horizon_ms = _interval_ms(watermark)
-    # the same conditional est-prune as the batch operator: below the
-    # 1/bands floor a band collision already certifies est >= est_cut
-    est_cut = max(0.0, threshold - 2.5 * (threshold * (1 - threshold) / num_hashes) ** 0.5)
-    apply_est = est_cut > 1.0 / bands
+    # the same conditional est-prune as the batch operator (None: no-op)
+    est_cut = dd._est_cut(threshold, num_hashes, bands)
 
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    positions = F.sequence(
-        F.lit(1), F.greatest(F.length("_norm") - (shingle_k - 1), F.lit(1))
+    base = docs.withColumn("_norm", dd._normalized(F.col(text_col))).withColumn(
+        "_shingles", dd._shingle_hash_array(F.col("_norm"), shingle_k)
     )
-    shingles = F.transform(
-        positions, lambda p: F.xxhash64(F.col("_norm").substr(p, F.lit(shingle_k)))
-    )
-    base = docs.withColumn("_norm", norm).withColumn("_shingles", shingles)
     if not slim:
         # full mode keeps the shingle SET in state for the in-state exact
         # verify — the ~85 KB/horizon-doc term slim mode eliminates
@@ -552,46 +548,20 @@ def streaming_minhash_neardup_pairs(
             "_sig",
             F.array(
                 *[
-                    F.array_min(
-                        F.transform(
-                            F.col("_shingles"),
-                            lambda h: F.xxhash64(
-                                F.shiftleft(F.lit(i + 1), 48).bitwiseXOR(h)
-                            ),
-                        )
-                    )
+                    F.array_min(F.transform(F.col("_shingles"), lambda h: dd._seeded_hash(h, i)))
                     for i in range(num_hashes)
                 ]
             ),
         )
         .withColumn(
             "_bhs",
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[F.col("_sig")[b * rows_per_band + i] for i in range(rows_per_band)],
-                    )
-                    for b in range(bands)
-                ]
-            ),
+            F.array(*[dd._band_key(F.col("_sig"), b, rows_per_band) for b in range(bands)]),
         )
     )
-    # blocked banding (r11, same contract as the batch operator): the
-    # block key joins the STATE key, so buckets — and therefore state
-    # partitions — never span blocks; null blocks group together
-    blk_cols = (
-        [
-            F.xxhash64(
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                    for c in block_cols
-                ]
-            ).alias("_blk")
-        ]
-        if block_cols
-        else []
-    )
+    # blocked banding (same contract as the batch operator): the block key
+    # joins the STATE key, so buckets — and therefore state partitions —
+    # never span blocks
+    blk_cols = [dd._block_key(block_cols)] if block_cols else []
     exploded = (
         base.withWatermark(ts_col, watermark)
         .select(
@@ -661,7 +631,7 @@ def streaming_minhash_neardup_pairs(
                     )
                     if first != band:
                         continue
-                    if apply_est:
+                    if est_cut is not None:
                         # fraction of equal minhash positions — the same
                         # unbiased estimator the batch est-prune uses
                         est = sum(
@@ -726,8 +696,6 @@ def streaming_minhash_neardup_pairs(
     # CANDIDATE rows only, since the expressions reference the post-join
     # text columns. The est-prune already ran in-state, so the join volume
     # tracks true-pair density, not the band-collision floor.
-    def _shset(text):
-        return _shingle_set_expr(text, shingle_k)
 
     # one row per id: a store fed by at-least-once ingest can carry
     # re-delivered ids, and a duplicate store row would FAN OUT the join
@@ -752,18 +720,10 @@ def streaming_minhash_neardup_pairs(
             store.select(F.col("_vid").alias("id_b"), F.col("_vtext").alias("_tb")),
             "id_b",
         )
-        .withColumn("_sha", _shset(F.col("_ta")))
-        .withColumn("_shb", _shset(F.col("_tb")))
+        .withColumn("_sha", _shingle_set_expr(F.col("_ta"), shingle_k))
+        .withColumn("_shb", _shingle_set_expr(F.col("_tb"), shingle_k))
     )
-    n_int = F.size(F.array_intersect(F.col("_sha"), F.col("_shb"))).cast("double")
-    union = F.size("_sha") + F.size("_shb") - n_int
-    return (
-        joined.withColumn(
-            "jaccard_sim", F.when(union > 0, n_int / union).otherwise(F.lit(0.0))
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-    )
+    return _jaccard_kept(joined, threshold)
 
 
 def session_windows(events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes") -> DataFrame:

@@ -17,8 +17,7 @@ def spark():
     from devcontainers_etl_node_spark.config import EngineConfig
     from devcontainers_etl_node_spark.session import get_spark
 
-    cfg = EngineConfig()
-    cfg.master = "local[8]"
+    cfg = EngineConfig()  # master follows SPARK_GRAFT_CPUS / the host
     cfg.shuffle_partitions = 8
     s = get_spark(cfg)
     yield s

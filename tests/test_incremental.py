@@ -422,12 +422,34 @@ def test_blocked_incremental_rejects_duplicate_batch_ids(spark):
             hist, hist_sigs, dup_batch, block_cols=["lang"]
         )
     # unblocked: same batch is accepted (groupBy collapses the dup rows)
-    pairs, _sigs, release = dedup.minhash_incremental_pairs(
+    pairs, _sigs = dedup.minhash_incremental_pairs(
         hist, hist_sigs, dup_batch
     )
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    release()
     assert (7, 8) in got
+
+
+def test_blocked_incremental_committed_id_error_wins(spark):
+    """A blocked batch that both repeats an id and re-submits a committed
+    id always raises the committed-id error, whatever order the two
+    checks' rows come back in."""
+    hist = spark.createDataFrame(
+        [(1, "totally different historical filler text with its own words", "en")],
+        ["doc_id", "text", "lang"],
+    )
+    hist_sigs = dedup.minhash_signature_table(
+        dedup.shingle_hash_rows(
+            hist.select(F.col("doc_id").alias("_id"), F.col("text").alias("_text"))
+        )
+    )
+    both_faults = spark.createDataFrame(
+        [(7, BASE, "en"), (7, BASE, "en"), (1, BASE + " extra", "en")],
+        ["doc_id", "text", "lang"],
+    )
+    with pytest.raises(ValueError, match="already present in the committed snapshot"):
+        dedup.minhash_incremental_pairs(
+            hist, hist_sigs, both_faults, block_cols=["lang"]
+        )
 
 
 def test_persist_shingles_parity_and_contract(spark, tmp_path):

@@ -158,11 +158,10 @@ def test_minhash_incremental_blocked_parity(spark):
             old_df.select(F.col("doc_id").alias("_id"), F.col("text").alias("_text"))
         )
     )
-    pairs, _merged, release = dedup.minhash_incremental_pairs(
+    pairs, _merged = dedup.minhash_incremental_pairs(
         old_df, old_sigs, new_df, threshold=0.5, block_cols=["lang"]
     )
     got = {(p.id_a, p.id_b) for p in pairs.collect()}
-    release()
     assert got == batch
     assert (1, 100) in got and (3, 101) in got
     assert (3, 100) not in got and (1, 101) not in got  # cross-block
@@ -229,11 +228,10 @@ def test_minhash_incremental_budget_gate(spark):
         dedup.minhash_incremental_pairs(
             old_df, old_sigs, new_df, threshold=0.5, max_collisions_per_doc=3.0
         )
-    pairs, _m, release = dedup.minhash_incremental_pairs(
+    pairs, _m = dedup.minhash_incremental_pairs(
         old_df, old_sigs, new_df, threshold=0.5
     )
     assert pairs.count() > 0
-    release()
 
 
 def test_minhash_incremental_blocked_requires_doc_coverage(spark):
@@ -266,11 +264,10 @@ def test_minhash_incremental_blocked_requires_doc_coverage(spark):
         )
     # unblocked: runs (verify-side coverage is a separate, documented
     # contract), and still finds the new-vs-covered-old pair
-    pairs, _m, release = dedup.minhash_incremental_pairs(
+    pairs, _m = dedup.minhash_incremental_pairs(
         old_df, old_sigs, new_df, threshold=0.5
     )
     got = {(p.id_a, p.id_b) for p in pairs.collect()}
-    release()
     assert (1, 100) in got
 
 
@@ -1092,7 +1089,7 @@ def test_minhash_incremental_parity(spark):
             old_df.select(F.col("doc_id").alias("_id"), F.col("text").alias("_text"))
         )
     )
-    pairs, merged, release = dedup.minhash_incremental_pairs(old_df, old_sigs, new_df, threshold=0.5)
+    pairs, merged = dedup.minhash_incremental_pairs(old_df, old_sigs, new_df, threshold=0.5)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert got == expected
     assert (1, 2) not in got  # old x old excluded by construction
@@ -1105,7 +1102,6 @@ def test_minhash_incremental_parity(spark):
     m = {r._id: list(r._sig) for r in merged.collect()}
     r = {r._id: list(r._sig) for r in rebuilt.collect()}
     assert m == r
-    release()
 
     # re-submitting a committed batch (overlapping ids) must fail loudly,
     # not silently double-sign the snapshot (ADVICE r4): `merged` is the

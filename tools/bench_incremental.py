@@ -92,9 +92,8 @@ def main():
         ).localCheckpoint(eager=True)
 
         t0 = time.perf_counter()
-        pairs, _sigs, release = dedup.minhash_incremental_pairs(history, hist_sigs, batch)
+        pairs, _sigs = dedup.minhash_incremental_pairs(history, hist_sigs, batch)
         got = {(r.id_a, r.id_b) for r in pairs.collect()}
-        release()
         t_inc = time.perf_counter() - t0
 
         assert got == full_new, f"pair mismatch at n_hist={n_hist}"

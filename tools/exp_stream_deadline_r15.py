@@ -44,7 +44,7 @@ ROOT = "/tmp/stream_deadline_r15"
 
 
 def corpus(spark, n: int):
-    # same shape as exp_incr_scale_r14: dup families of {x, x+n/2}, event
+    # dup families of {x, x+n/2} (pairs straddle the midpoint), event
     # time spread over 30 min so the 10-min watermark holds ~n/3 in state
     mid = n // 2
     fam = F.concat_ws(
